@@ -141,6 +141,25 @@ class RecordedSTFixture:
         return out
 
 
+class CountingEmbedder:
+    """The hash embedder plus a tally: every ``encode`` appends one
+    line per text to ``log_path``, so a test can count how many rows a
+    write really embedded across all Python workers (appends of one
+    short write each are atomic on a local file system).  Lives in the
+    package, like ``RecordedSTFixture``, so workers import it by module
+    reference; pass ``functools.partial(CountingEmbedder, path, dim)``
+    as the ``embed_text_udf`` factory."""
+
+    def __init__(self, log_path: str, dim: int):
+        self.log_path = log_path
+        self.inner = _HashEmbedder(dim)
+
+    def encode(self, texts: list[str]) -> np.ndarray:
+        with open(self.log_path, "a") as f:
+            f.write("x\n" * len(texts))
+        return self.inner.encode(texts)
+
+
 # per-process model cache, keyed by (dim, factory) — one UDF instance
 # per dim/backend may coexist in a process (a single global would
 # silently serve the wrong dimensionality to later UDFs)

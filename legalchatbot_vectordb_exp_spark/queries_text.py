@@ -884,9 +884,14 @@ def _bpe_run(spark: SparkSession, sf_dir: str):
                 "cnt",
             )
             .select(
+                # a word merged down to one symbol has no pairs:
+                # sequence(1, 0) would be [1, 0] and index syms[-1]
+                # (DuckDB's range(1, 1) is already empty)
                 F.explode(
                     F.expr(
-                        "transform(sequence(1, size(syms) - 1),"
+                        "transform(if(size(syms) < 2,"
+                        " cast(array() as array<int>),"
+                        " sequence(1, size(syms) - 1)),"
                         " i -> concat('|', syms[i - 1], '||',"
                         " syms[i], '|'))"
                     )

@@ -12,10 +12,15 @@ reference only implied made explicit and *validated at write time*:
   always score with a dot product)
 * ``id`` is unique — upsert is last-writer-wins on id
 
-Write-time validation is a filter + count on the violating rows — a
-narrow scan, no shuffle.  Upsert without Delta is expressed as
-anti-join + union rewrite (at scale you'd swap the sink for Delta's
-``MERGE INTO`` keyed on id; the logical op is identical).
+Write-time validation is one aggregate: a conditional sum of the dim
+violations plus rows minus ``countDistinct(id)`` for the duplicates —
+a scan plus the distinct-id shuffle.  Every write runs its source
+once: ``create`` validates the files it has just written to a staging
+directory before swapping them in, the other writes pin the source
+(``computed_once``) so validation and the write share one computation.
+Upsert without Delta is expressed as anti-join + union rewrite (at
+scale you'd swap the sink for Delta's ``MERGE INTO`` keyed on id; the
+logical op is identical).
 
 For the production 100 TB sink shape — snapshot isolation, file-level
 copy-on-write MERGE, time travel, multi-writer optimistic concurrency
@@ -26,8 +31,11 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from legalchatbot_vectordb_exp_spark.functions.vector import l2_norm, l2_normalize
@@ -77,6 +85,48 @@ def _no_fault(stage: str) -> None:
 
 
 _MERGE_FAULT = _no_fault
+
+
+@contextmanager
+def computed_once(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` pinned for a write that reads it more than once
+    (validation, sampling, the write itself), so its lineage — PDF
+    decode, an embedding UDF — runs once instead of once per job.
+    The pin has one owner: a frame the caller already cached is used
+    as is and left cached; a pin taken here is released on exit,
+    also when the write fails."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    pinned = df.persist()
+    try:
+        yield pinned
+    finally:
+        pinned.unpersist()
+
+
+def validate_vectors(
+    df: DataFrame, dim: int, vector_col: str, id_col: str, name: str
+) -> None:
+    """Write-time invariants: every vector non-null and exactly
+    ``dim`` wide, ids unique (null ids count as duplicates).  One
+    aggregation job for both — dim violations as a conditional sum,
+    duplicates as rows minus distinct ids — not two full scans."""
+    row = df.agg(
+        F.sum(
+            (F.col(vector_col).isNull() | (F.size(vector_col) != dim))
+            .cast("int")
+        ).alias("bad"),
+        (F.count(F.lit(1)) - F.countDistinct(F.col(id_col))).alias(
+            "dupes"
+        ),
+    ).first()
+    bad, dupes = row["bad"] or 0, row["dupes"] or 0
+    if bad:
+        raise ValueError(f"collection {name}: {bad} rows violate dim={dim}")
+    if dupes:
+        raise ValueError(f"collection {name}: {dupes} duplicate ids")
+
 
 # DBSF fusion collects each prefetch on the driver (the sequential
 # rank-order fold IS the cross-engine determinism contract); this cap
@@ -141,50 +191,27 @@ class VectorCollection:
         normalize: bool = True,
     ) -> "VectorCollection":
         """Truncate-and-create (the reference's ``recreate_collection``,
-        ``Qdrant/VectorDB/Database.py:10-14``): overwrite the table,
-        record (dim, metric) properties, validate, optionally normalize."""
-        out = self._validated(df, dim, vector_col, id_col)
+        ``Qdrant/VectorDB/Database.py:10-14``): replace the table,
+        record (dim, metric) properties, validate, optionally normalize.
+
+        The source runs once, in the staging write; validation then
+        reads the written files (normalizing keeps sizes and nulls, so
+        the counts are the source's), and only a validated copy
+        replaces an existing collection — a rejected or failed create
+        leaves the old one as it was."""
+        out = df
         if normalize and metric == "cosine":
             out = out.withColumn(vector_col, l2_normalize(vector_col))
-        out.write.mode("overwrite").parquet(self.path)
-        with open(os.path.join(self.path, _PROPS_FILE), "w") as f:
-            json.dump(
-                {
-                    "dim": dim,
-                    "metric": metric,
-                    "vector_col": vector_col,
-                    "id_col": id_col,
-                },
-                f,
-            )
-        self._invalidate_card_cache()
-        return self
-
-    def _validated(
-        self, df: DataFrame, dim: int, vector_col: str, id_col: str
-    ) -> DataFrame:
-        # one aggregation job for both invariants (dim violations as a
-        # conditional sum, duplicates as rows minus distinct ids),
-        # not two full scans — this runs on every create/upsert
-        row = df.agg(
-            F.sum(
-                (F.col(vector_col).isNull() | (F.size(vector_col) != dim))
-                .cast("int")
-            ).alias("bad"),
-            (F.count(F.lit(1)) - F.countDistinct(F.col(id_col))).alias(
-                "dupes"
-            ),
-        ).first()
-        bad, dupes = row["bad"] or 0, row["dupes"] or 0
-        if bad:
-            raise ValueError(
-                f"collection {self.name}: {bad} rows violate dim={dim}"
-            )
-        if dupes:
-            raise ValueError(
-                f"collection {self.name}: {dupes} duplicate ids"
-            )
-        return df
+        return self._staged_rewrite(
+            out,
+            {
+                "dim": dim,
+                "metric": metric,
+                "vector_col": vector_col,
+                "id_col": id_col,
+            },
+            validate=True,
+        )
 
     # -------------------------------------------------------------- upsert
 
@@ -196,38 +223,60 @@ class VectorCollection:
         INSERT`` and the rewrite disappears."""
         props = self.properties
         id_col, vector_col = props["id_col"], props["vector_col"]
-        incoming = self._validated(df, props["dim"], vector_col, id_col)
-        if props["metric"] == "cosine":
-            incoming = incoming.withColumn(
-                vector_col, l2_normalize(vector_col)
+        with computed_once(df) as incoming:
+            validate_vectors(
+                incoming, props["dim"], vector_col, id_col, self.name
             )
-        existing = self.read()
-        merged = existing.join(
-            incoming.select(id_col), on=id_col, how="left_anti"
-        ).unionByName(incoming)
-        return self._staged_rewrite(merged, props)
+            if props["metric"] == "cosine":
+                incoming = incoming.withColumn(
+                    vector_col, l2_normalize(vector_col)
+                )
+            existing = self.read()
+            merged = existing.join(
+                incoming.select(id_col), on=id_col, how="left_anti"
+            ).unionByName(incoming)
+            return self._staged_rewrite(merged, props)
 
     def _staged_rewrite(
-        self, df: DataFrame, props: dict
+        self, df: DataFrame, props: dict, validate: bool = False
     ) -> "VectorCollection":
         """Never overwrite the path still being read: stage (data AND
         props, so staging is a complete collection), rename the live
         dir aside, promote staging, then drop the old dir.  A crash
         between the two renames leaves both full copies on disk —
         recoverable — instead of the old rmtree-before-rename shape
-        that could destroy the collection outright."""
+        that could destroy the collection outright.  ``validate``
+        checks the staged files against ``props`` before the swap; a
+        failed write or check removes the staging dir and leaves the
+        live collection untouched."""
         import shutil
 
         staging = self.path + ".staging"
-        df.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, _PROPS_FILE), "w") as f:
-            json.dump(props, f)
-        old = self.path + ".old"
-        if os.path.exists(old):
+        try:
+            df.write.mode("overwrite").parquet(staging)
+            if validate:
+                validate_vectors(
+                    # the written schema is known: no inference job
+                    self.spark.read.schema(df.schema).parquet(staging),
+                    props["dim"],
+                    props["vector_col"],
+                    props["id_col"],
+                    self.name,
+                )
+            with open(os.path.join(staging, _PROPS_FILE), "w") as f:
+                json.dump(props, f)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        if os.path.exists(self.path):
+            old = self.path + ".old"
+            if os.path.exists(old):
+                shutil.rmtree(old)
+            os.rename(self.path, old)
+            os.rename(staging, self.path)
             shutil.rmtree(old)
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(old)
+        else:
+            os.rename(staging, self.path)
         self._invalidate_card_cache()
         return self
 
@@ -345,30 +394,31 @@ class VectorCollection:
         tolerate.  Centroid vectors are stored in the properties
         sidecar so probing needs no table scan.
         """
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
+        # validation, the count, the centroid sample, every Lloyd round
+        # and the write all read one computation of the source
+        with computed_once(df) as df:
+            validate_vectors(df, dim, vector_col, id_col, self.name)
+            out = df.withColumn(vector_col, l2_normalize(vector_col))
 
-        out = self._validated(df, dim, vector_col, id_col)
-        out = out.withColumn(vector_col, l2_normalize(vector_col))
+            n = out.count()
+            step = max(n // n_clusters, 1)
+            centroid_rows = (
+                out.select(id_col, vector_col)
+                .withColumn("_rn", F.row_number().over(Window.orderBy(id_col)))
+                .filter((F.col("_rn") - 1) % step == 0)
+                .limit(n_clusters)
+                .collect()
+            )
+            centroids = [(i, list(map(float, r[1]))) for i, r in enumerate(centroid_rows)]
 
-        n = out.count()
-        step = max(n // n_clusters, 1)
-        centroid_rows = (
-            out.select(id_col, vector_col)
-            .withColumn("_rn", F.row_number().over(Window.orderBy(id_col)))
-            .filter((F.col("_rn") - 1) % step == 0)
-            .limit(n_clusters)
-            .collect()
-        )
-        centroids = [(i, list(map(float, r[1]))) for i, r in enumerate(centroid_rows)]
+            for _ in range(kmeans_iters):
+                centroids = self._lloyd_round(out, centroids, dim, vector_col)
 
-        for _ in range(kmeans_iters):
-            centroids = self._lloyd_round(out, centroids, dim, vector_col)
+            assigned = self._assign_clusters(out, centroids, vector_col)
 
-        assigned = self._assign_clusters(out, centroids, vector_col)
-
-        assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            self.path
-        )
+            assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(
+                self.path
+            )
         with open(os.path.join(self.path, _PROPS_FILE), "w") as f:
             json.dump(
                 {
@@ -449,38 +499,47 @@ class VectorCollection:
                 f"collection {self.name} is not IVF-partitioned"
             )
         id_col, vector_col = props["id_col"], props["vector_col"]
-        incoming = self._validated(df, props["dim"], vector_col, id_col)
-        incoming = incoming.withColumn(vector_col, l2_normalize(vector_col))
-        incoming = self._assign_clusters(
-            incoming, props["centroids"], vector_col
-        )
-
-        new_cells = {
-            r[0] for r in incoming.select("cluster_id").distinct().collect()
-        }
-        stale_cells = {
-            r[0]
-            for r in self.read()
-            .join(F.broadcast(incoming.select(id_col)), id_col, "semi")
-            .select("cluster_id")
-            .distinct()
-            .collect()
-        }
-        affected = sorted(new_cells | stale_cells)
-
-        kept = (
-            self.read()
-            .filter(F.col("cluster_id").isin(affected))
-            .join(
-                F.broadcast(incoming.select(id_col)), id_col, "left_anti"
+        # the id probes, both cell scans and the write read one
+        # computation of the source
+        with computed_once(df) as incoming:
+            validate_vectors(
+                incoming, props["dim"], vector_col, id_col, self.name
             )
-        )
-        merged = kept.unionByName(incoming.select(*kept.columns))
+            incoming = incoming.withColumn(vector_col, l2_normalize(vector_col))
+            incoming = self._assign_clusters(
+                incoming, props["centroids"], vector_col
+            )
 
-        staging = self.path + ".staging"
-        merged.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            staging
-        )
+            new_cells = {
+                r[0] for r in incoming.select("cluster_id").distinct().collect()
+            }
+            stale_cells = {
+                r[0]
+                for r in self.read()
+                .join(F.broadcast(incoming.select(id_col)), id_col, "semi")
+                .select("cluster_id")
+                .distinct()
+                .collect()
+            }
+            affected = sorted(new_cells | stale_cells)
+
+            kept = (
+                self.read()
+                .filter(F.col("cluster_id").isin(affected))
+                .join(
+                    F.broadcast(incoming.select(id_col)), id_col, "left_anti"
+                )
+            )
+            merged = kept.unionByName(incoming.select(*kept.columns))
+
+            staging = self.path + ".staging"
+            try:
+                merged.write.mode("overwrite").partitionBy(
+                    "cluster_id"
+                ).parquet(staging)
+            except BaseException:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
         for cell in affected:
             part = f"cluster_id={cell}"
             src = os.path.join(staging, part)
@@ -688,25 +747,26 @@ class VectorCollection:
                 "dupes"
             )
         )
-        row = df.agg(*aggs).first()
-        # `or 0`: sum() over zero rows is NULL — an empty input is
-        # valid (0 violations), matching create()/_validated()
-        for name in vectors:
-            if row[f"bad_{name}"] or 0:
+        with computed_once(df) as df:
+            row = df.agg(*aggs).first()
+            # `or 0`: sum() over zero rows is NULL — an empty input is
+            # valid (0 violations), matching validate_vectors()
+            for name in vectors:
+                if row[f"bad_{name}"] or 0:
+                    raise ValueError(
+                        f"collection {self.name}: {row[f'bad_{name}']} "
+                        f"rows violate dim={vectors[name]['dim']} for "
+                        f"vector '{name}'"
+                    )
+            if row["dupes"] or 0:
                 raise ValueError(
-                    f"collection {self.name}: {row[f'bad_{name}']} rows "
-                    f"violate dim={vectors[name]['dim']} for vector "
-                    f"'{name}'"
+                    f"collection {self.name}: {row['dupes']} duplicate ids"
                 )
-        if row["dupes"] or 0:
-            raise ValueError(
-                f"collection {self.name}: {row['dupes']} duplicate ids"
-            )
-        out = df
-        for name, cfg in vectors.items():
-            if cfg.get("metric", "cosine") == "cosine":
-                out = out.withColumn(name, l2_normalize(name))
-        out.write.mode("errorifexists").parquet(self.path)
+            out = df
+            for name, cfg in vectors.items():
+                if cfg.get("metric", "cosine") == "cosine":
+                    out = out.withColumn(name, l2_normalize(name))
+            out.write.mode("errorifexists").parquet(self.path)
         with open(os.path.join(self.path, _PROPS_FILE), "w") as f:
             json.dump(
                 {
@@ -792,14 +852,11 @@ class VectorCollection:
         # derivation runs once, not per job.  The pinned set is the
         # posting relation itself (bounded, spills to disk); at
         # production scale the same role is a parquet staging write.
-        df = df.select(id_col, term_col, weight_col).persist()
-        try:
+        with computed_once(df.select(id_col, term_col, weight_col)) as df:
             return self._create_sparse_pinned(
                 df, id_col, term_col, weight_col, n_buckets,
                 doc_slices, parts_budget,
             )
-        finally:
-            df.unpersist()
 
     def _create_sparse_pinned(
         self,

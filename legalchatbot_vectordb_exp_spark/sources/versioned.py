@@ -105,6 +105,10 @@ except ImportError:  # pragma: no cover - older Spark
     from pyspark.sql.utils import AnalysisException
 
 from legalchatbot_vectordb_exp_spark.functions.vector import l2_normalize
+from legalchatbot_vectordb_exp_spark.sources.collection import (
+    computed_once,
+    validate_vectors,
+)
 
 _PROPS_FILE = "_collection.json"
 
@@ -623,8 +627,8 @@ def _collect_if_small(df: DataFrame, cap: int) -> list | None:
 def _validate_rows(
     rows: list, dim: int, vector_col: str, id_col: str, name: str
 ) -> None:
-    """Driver-side twin of ``_validate`` for already-collected small
-    batches — identical error contract (null ids count as
+    """Driver-side twin of ``validate_vectors`` for already-collected
+    small batches — identical error contract (null ids count as
     duplicates)."""
     bad = sum(
         1
@@ -637,37 +641,6 @@ def _validate_rows(
         raise ValueError(f"collection {name}: {bad} rows violate dim={dim}")
     if dupes:
         raise ValueError(f"collection {name}: {dupes} duplicate ids")
-
-
-def _validate(
-    df: DataFrame, dim: int, vector_col: str, id_col: str, name: str
-) -> DataFrame:
-    """Write-time invariants (same contract as VectorCollection):
-    every vector non-null and exactly ``dim`` wide, ids unique.  Both
-    checks fold into ONE aggregation job (dim violations as a
-    conditional sum, duplicates as rows minus distinct ids — null ids
-    count as duplicates) instead of two full scans; validation runs
-    on every create/merge/stream micro-batch, so the saved job is per
-    commit."""
-    rows = _collect_if_small(df, _ISIN_PUSHDOWN_LIMIT)
-    if rows is not None:
-        _validate_rows(rows, dim, vector_col, id_col, name)
-        return df
-    row = df.agg(
-        F.sum(
-            (F.col(vector_col).isNull() | (F.size(vector_col) != dim))
-            .cast("int")
-        ).alias("bad"),
-        (F.count(F.lit(1)) - F.countDistinct(F.col(id_col))).alias(
-            "dupes"
-        ),
-    ).first()
-    bad, dupes = row["bad"] or 0, row["dupes"] or 0
-    if bad:
-        raise ValueError(f"collection {name}: {bad} rows violate dim={dim}")
-    if dupes:
-        raise ValueError(f"collection {name}: {dupes} duplicate ids")
-    return df
 
 
 def _footer_minmax_multi(path: str, cols: list[str]) -> dict:
@@ -1713,6 +1686,27 @@ class VersionedCollection:
                 f"collection {self.name} already exists (latest "
                 f"v{self.latest_version()}); merge/delete_where instead"
             )
+        # the probe, validation, range sampling and the write all read
+        # ONE computation of the source (an embedding UDF runs once per
+        # row): the probe fills the pinned partitions it scans, the
+        # validation aggregate fills the rest
+        with computed_once(df) as df:
+            self._create_pinned(
+                df, dim, metric, vector_col, id_col, normalize,
+                cluster_files,
+            )
+        return self
+
+    def _create_pinned(
+        self,
+        df: DataFrame,
+        dim: int,
+        metric: str,
+        vector_col: str,
+        id_col: str,
+        normalize: bool,
+        cluster_files: int | None,
+    ) -> None:
         rows = _collect_if_small(df, _ISIN_PUSHDOWN_LIMIT)
         if rows is not None:
             _validate_rows(rows, dim, vector_col, id_col, self.name)
@@ -1751,7 +1745,8 @@ class VersionedCollection:
                     df.schema,
                 )
         else:
-            out = _validate(df, dim, vector_col, id_col, self.name)
+            validate_vectors(df, dim, vector_col, id_col, self.name)
+            out = df
             if cluster_files is not None:
                 out = out.repartitionByRange(
                     cluster_files, id_col
@@ -1775,7 +1770,6 @@ class VersionedCollection:
             out, 0, None, "create", carried=[], schema=out.schema,
             id_col=id_col,
         )
-        return self
 
     # --------------------------------------------------------------- read
 
@@ -2139,9 +2133,10 @@ class VersionedCollection:
             # collects the batch (bounded by _ISIN_PUSHDOWN_LIMIT) and
             # validation, key list, bounds and count all come from it
             # in Python.  Large batches: validation (same contract as
-            # _validate) FOLDED with the merge-key bounds/count into
-            # ONE distributed aggregation — the source is scanned once
-            # instead of once for validation plus once for bounds.
+            # validate_vectors) FOLDED with the merge-key bounds/count
+            # into ONE distributed aggregation — the source is scanned
+            # once for validation and bounds, and once more by the
+            # write.
             dim = props["dim"]
             if self.constraints:
                 # CHECK constraints ride the first job that touches
@@ -2197,7 +2192,15 @@ class VersionedCollection:
                     )
                 key_bounds = (row["lo"], row["hi"])
                 n_keys = row["n_keys"]
-            incoming = source
+            # a small batch is written from the rows already collected
+            # (a local relation), so the source — an embedding UDF, a
+            # constraint guard — is not run a second time; the JVM
+            # l2_normalize below keeps vectors bit-identical
+            incoming = (
+                source
+                if small is None
+                else self.spark.createDataFrame(small, source.schema)
+            )
             if props["metric"] == "cosine" and props.get("normalize", True):
                 incoming = incoming.withColumn(
                     vector_col, l2_normalize(vector_col)
@@ -2576,7 +2579,12 @@ class VersionedCollection:
         # unknown size (an unknown batch no-op'd instead of merging
         # would be a silent data loss)
         assert n_keys is not None
-        incoming = source
+        # small batches append the rows already collected (see merge)
+        incoming = (
+            source
+            if small is None
+            else self.spark.createDataFrame(small, source.schema)
+        )
         if props["metric"] == "cosine" and props.get("normalize", True):
             incoming = incoming.withColumn(
                 vector_col, l2_normalize(vector_col)

@@ -196,7 +196,16 @@ def stage_changes_feed(
     if staging_dir is None:
         staging_dir = tempfile.mkdtemp(prefix="cdf_stage_")
     os.makedirs(staging_dir, exist_ok=True)
-    base_t = _time.time() - 3600  # recent enough for maxFileAge
+    # every span is stamped base_t + its version, on ONE clock per
+    # staging dir: a call that resumes (or retries after a crash that
+    # left later spans published) anchors on the newest span already
+    # there, so a re-staged span still sorts between its neighbours
+    staged = sorted(_glob.glob(os.path.join(staging_dir, "v*.parquet")))
+    if staged:
+        last = staged[-1]
+        base_t = os.stat(last).st_mtime - int(os.path.basename(last)[1:9])
+    else:
+        base_t = _time.time() - 3600  # recent enough for maxFileAge
 
     def _stage_span(v: int) -> None:
         """One commit span -> one staged file.  Independent of every
@@ -205,12 +214,15 @@ def stage_changes_feed(
         wait at small change volumes, and the driver otherwise runs
         them strictly back-to-back.  Each file is stamped with its
         commit-order mtime (base_t + tv, 1 s apart — ms-granularity
-        listing) IMMEDIATELY after the rename makes it visible:
-        base_t is fixed up front, so the stamps are thread-safe and a
-        file is never observable with its raw write mtime.  A lister
-        racing the pool can still see span v+2 before v+1 exists —
-        with concurrent staging, start/resume streams only after this
-        function returns (the replay queries all do)."""
+        listing) while it is still the unpublished tmp part, and only
+        then renamed into place (a rename keeps the mtime): base_t is
+        fixed up front, so the stamps are thread-safe, and a crash
+        between the stamp and the rename leaves the span unpublished
+        — the next call stages it again — never published with its
+        raw write mtime.  A lister racing the pool can still see span
+        v+2 before v+1 exists — with concurrent staging, start/resume
+        streams only after this function returns (the replay queries
+        all do)."""
         tv = v + 1
         dest = os.path.join(staging_dir, f"v{tv:08d}.parquet")
         if os.path.exists(dest):
@@ -225,8 +237,8 @@ def stage_changes_feed(
         tmp = dest + ".tmpdir"
         feed.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = sorted(_glob.glob(os.path.join(tmp, "part-*")))[0]
+        os.utime(part, (base_t + tv, base_t + tv))
         os.replace(part, dest)
-        os.utime(dest, (base_t + tv, base_t + tv))
         shutil.rmtree(tmp, ignore_errors=True)
 
     spans = list(range(from_version, to_version))

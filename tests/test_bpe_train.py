@@ -82,3 +82,37 @@ def test_encode_tokens_are_learned_vocabulary(spark):
     assert set(multi) <= merges, (
         f"tokens not in the merge table: {set(multi) - merges}"
     )
+
+
+def test_single_symbol_words_match_the_oracle(spark, tmp_path):
+    """Frequent two-letter words ("of", "in") merge down to ONE symbol
+    in the first rounds; the next round must count no pairs for them
+    (it used to index ``syms[-1]`` and raise under ANSI) and agree
+    with the DuckDB twin."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from legalchatbot_vectordb_exp_spark.registry import ORACLES
+
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from oracle_harness import compare
+
+    texts = [
+        "of in of in of in the rest of it",
+        "in spite of it all, of course",
+        "made of tin in the inn of kings",
+        "one of them is in, two of them are out",
+    ] * 5
+    pq.write_table(
+        pa.table({"doc_id": list(range(len(texts))), "text": texts}),
+        str(tmp_path / "documents.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path / 'documents.parquet'}'"
+    )
+    df = q_bpe_train_merges(spark, str(tmp_path))
+    assert df.count() == BPE_TRAIN_STEPS
+    compare(df, con, ORACLES["bpe_train_merges"], "bpe_train_merges")

@@ -81,6 +81,26 @@ def test_pdf_pages_fallback_kernel(spark, tmp_path):
     assert by_file["doc2.pdf"] == [(1, "solo")]
 
 
+def test_multi_file_glob_load_runs_no_listing_job(spark, tmp_path):
+    """40 files exceed Spark's default parallel-discovery threshold
+    (32); the local session lists them driver-side, so building the
+    page plan runs no Spark job at all."""
+    pdf_dir = tmp_path / "many"
+    pdf_dir.mkdir()
+    for i in range(40):
+        (pdf_dir / f"doc_{i:02d}.pdf").write_bytes(f"page {i}".encode())
+    sc = spark.sparkContext
+    group = f"glob-listing-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        pages = read_pdf_pages(spark, str(pdf_dir / "*.pdf"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert pages.count() == 40
+
+
 def test_chunk_dump_format(spark, tmp_path):
     path = str(tmp_path / "dump")
     df = spark.createDataFrame(

@@ -4,6 +4,7 @@ upsert into a VectorCollection (streaming/ingest.py)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from legalchatbot_vectordb_exp_spark.sources.collection import (
     VectorCollection,
@@ -149,3 +150,60 @@ def test_changes_feed_streams_one_commit_per_batch_and_resumes(
     # checkpointed offsets: ONLY the unseen commit is processed
     assert [sorted(vs) for _, vs, _ in batches] == [[3]]
     assert batches[0][2] == [(9, "insert")]
+
+
+def test_changes_feed_crash_between_stamp_and_publish_keeps_order(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the two filesystem steps that publish a staged
+    span (stamp its commit-order mtime, rename it into place) must
+    never leave a published span with its raw write mtime: the rerun
+    completes the log and every span's mtime follows commit order."""
+    import os
+
+    from legalchatbot_vectordb_exp_spark.sources.versioned import (
+        VersionedCollection,
+    )
+    from legalchatbot_vectordb_exp_spark.streaming.ingest import (
+        stage_changes_feed,
+    )
+
+    def _mkv(rows):
+        return spark.createDataFrame(
+            [(i, [float(i), 1.0, 0.0]) for i in rows],
+            "id long, vector array<double>",
+        )
+
+    coll = VersionedCollection(spark, str(tmp_path / "wh"), "crash")
+    coll.create(_mkv(range(4)), dim=3, metric="dot", normalize=False)
+    for i in range(4, 7):
+        coll.merge(_mkv([i]))  # v1..v3
+    staging = str(tmp_path / "cdf_log")
+    victim = os.path.join(staging, "v00000002.parquet")
+
+    real_replace, real_utime = os.replace, os.utime
+    steps: list[str] = []
+
+    def crash_on_second_step(fn):
+        def wrapped(*args, **kwargs):
+            paths = [str(a) for a in args[:2]]
+            if any(p.startswith(victim) for p in paths):
+                steps.append(fn.__name__)
+                if len(steps) == 2:
+                    raise RuntimeError("simulated crash")
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(os, "replace", crash_on_second_step(real_replace))
+    monkeypatch.setattr(os, "utime", crash_on_second_step(real_utime))
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        stage_changes_feed(coll, 0, staging_dir=staging)
+    monkeypatch.undo()
+    assert sorted(steps) == ["replace", "utime"]
+
+    stage_changes_feed(coll, 0, staging_dir=staging)
+    spans = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    assert spans == [f"v{v:08d}.parquet" for v in (1, 2, 3)]
+    mtimes = [os.stat(os.path.join(staging, f)).st_mtime for f in spans]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 3
